@@ -327,8 +327,10 @@ def validation_process_batch(schema, partition_col: str):
     validation job per batch (``validate_table`` with the partition
     column as the grouping key — the same fused sum(!pred) aggregate
     the per-partition path runs, shared across the whole batch), split
-    back into per-partition metric dicts for the audit log. Uniqueness
-    stays off here (it is cross-partition state; run it table-level)."""
+    back into per-partition metric dicts for the audit log from the
+    verdict rows that job already collected (``verdict_rows``; no
+    further job). Uniqueness stays off here (it is cross-partition
+    state; run it table-level)."""
     from pandera_forge_spark.validator import validate_table
 
     def process_batch(df: DataFrame, parts: list) -> dict:
@@ -336,7 +338,7 @@ def validation_process_batch(schema, partition_col: str):
             df, schema, partition_cols=[partition_col], check_unique=False
         )
         out: dict = {}
-        for row in res.verdicts.collect():
+        for row in res.verdict_rows:
             d = row.asDict()
             # the partition column comes back as its RAW directory
             # string (type inference disabled in HivePartitionedParquet

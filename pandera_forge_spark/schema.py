@@ -127,8 +127,9 @@ class Check:
     """One executable constraint on a column.
 
     ``kind`` is one of CHECK_KINDS; ``value`` its parameter (bound for
-    ge/le, list for isin, regex for str_matches, ...). Compiled to a
-    Boolean Spark Column by checks.compile_check.
+    ge/le, list for isin, regex for str_matches, ...). Rendered to
+    Spark SQL text by checks.check_sql (``custom_pandas``: a pandas UDF
+    Column by checks.compile_check).
     """
 
     column: str

@@ -297,6 +297,13 @@ def read_fixed_width(
         if name in seen:
             raise ValueError(f"read_fixed_width: duplicate column {name!r}")
         seen.add(name)
+    spans = sorted((int(start), int(length), name) for name, start, length, _ in colspecs)
+    for (s0, n0, a), (s1, _, b) in zip(spans, spans[1:]):
+        if s1 < s0 + n0:
+            raise ValueError(
+                f"read_fixed_width: columns {a!r} (bytes {s0}..{s0 + n0 - 1}) "
+                f"and {b!r} (from byte {s1}) overlap"
+            )
     raw = spark.read.text(path)
     cols = []
     for name, start, length, dtype in colspecs:

@@ -345,3 +345,50 @@ def test_audit_summary_rollup(spark, tmp_path):
     assert s["worst_partition"] == "2" and s["worst_violations"] == 7
     assert s["violation_rate"] == round(7 / 200, 8)
     assert s["wall_sec_total"] >= s["wall_sec_max"] >= 0
+
+
+def test_validation_batch_runs_only_validate_tables_jobs(spark, tmp_path):
+    """process_batch splits the verdict rows validate_table already
+    collected: a batch runs exactly the jobs validate_table runs on the
+    same frame, none to re-collect the verdicts."""
+    from pandera_forge_spark.runner import validation_process_batch
+    from pandera_forge_spark.schema import ColumnSpec, TableSchema
+    from pandera_forge_spark.validator import validate_table
+
+    docs = make_documents(spark, 300, seed=3, n_buckets=5)
+    table = HivePartitionedParquet(spark, str(tmp_path / "t"), "bucket")
+    table.write(docs)
+    parts = table.list_partitions()
+    df = table.read_partitions(parts)
+    schema = TableSchema(
+        name="Docs",
+        columns=[
+            ColumnSpec(
+                name="doc_id", sanitized_name="doc_id", name_was_valid=True,
+                spark_type="string", pandera_type="String", nullable=False,
+                ge="d",
+            )
+        ],
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res, validate_jobs = jobs(
+        "verdict-validate",
+        lambda: validate_table(df, schema, partition_cols=["bucket"], check_unique=False),
+    )
+    per_part, batch_jobs = jobs(
+        "verdict-batch", lambda: validation_process_batch(schema, "bucket")(df, parts)
+    )
+    assert validate_jobs >= 1
+    assert batch_jobs == validate_jobs
+    assert sorted(per_part) == sorted(str(p) for p in parts)
+    assert sum(m["rows"] for m in per_part.values()) == res.total_rows == 300
+    assert res.verdict_rows == res.verdicts.collect()

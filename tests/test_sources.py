@@ -496,3 +496,25 @@ def test_read_fixed_width_fences(spark):
             spark, "/tmp/x",
             [("a", 1, 3, "string"), ("a", 4, 3, "string")],
         )
+    # overlap is checked on the specs sorted by start, whatever their order
+    with pytest.raises(ValueError, match=r"'a'.*'b'.*overlap"):
+        read_fixed_width(
+            spark, "/tmp/x",
+            [("b", 3, 2, "string"), ("a", 1, 3, "string")],
+        )
+    with pytest.raises(ValueError, match=r"'a'.*'c'.*overlap"):
+        read_fixed_width(
+            spark, "/tmp/x",
+            [("a", 1, 10, "string"), ("b", 20, 2, "string"), ("c", 5, 1, "string")],
+        )
+
+
+def test_read_fixed_width_adjacent_specs_pass(spark, tmp_path):
+    from pandera_forge_spark.sources.readers import read_fixed_width
+
+    (tmp_path / "x.txt").write_text("abcdef\n")
+    got = read_fixed_width(
+        spark, str(tmp_path),
+        [("b", 4, 3, "string"), ("a", 1, 3, "string")],
+    ).collect()
+    assert [(r.a, r.b) for r in got] == [("abc", "def")]
