@@ -16,7 +16,9 @@ node costs several py4j round trips (origin capture; ``F.col`` alone
 costs 13), so building the violation-count aggregate of a 37-check
 lineitem schema node by node took ~3.1k round trips (~0.24 s of driver
 time per ``validate_table`` call). One ``F.expr`` costs 3, whatever the
-length of the text.
+length of the text. The profiler's fused aggregate and top-k tree and
+the drift family's bin counts and statistics are rendered with the same
+``sql_ident`` / ``sql_literal``.
 
 Only ``custom_pandas`` — an Arrow pandas UDF over a Python callable —
 stays a Column; it has no SQL text.

@@ -26,34 +26,101 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandera_forge_spark.checks import quote_ident, sql_ident, sql_literal
+
 DEFAULT_BINS = 10
 EPS = 1e-6  # smoothing so empty bins don't blow up ln(p/q)
 
 
 def quantile_edges(df: DataFrame, col: str, bins: int = DEFAULT_BINS) -> list[float]:
     """Interior quantile edges of the baseline (bins-1 cut points)."""
-    probs = [i / bins for i in range(1, bins)]
+    probs = ", ".join(sql_literal(i / bins) for i in range(1, bins))
     row = df.agg(
-        F.percentile_approx(F.col(col), F.lit(probs), F.lit(10000)).alias("q")
+        F.expr(f"percentile_approx({sql_ident(col)}, array({probs}), 10000) AS q")
     ).collect()[0]
     return [float(v) for v in row["q"]]
 
 
-def _bin_exprs(col: Column, edges: Sequence[float]) -> list[Column]:
-    """Per-bin membership-count aggregates for bins defined by edges:
-    bin0 = (-inf, e0], bin_i = (e_{i-1}, e_i], bin_last = (e_last, inf)."""
+def _bin_exprs(
+    col: str,
+    edges: Sequence[float],
+    count: Optional[str] = "__n",
+    prefix: str = "__bin_",
+) -> list[Column]:
+    """The binned aggregates over column ``col`` (a name as ``F.col``
+    reads it), one ``F.expr`` each: ``count``, its non-null rows (left
+    out when None), then ``{prefix}i``, the rows in bin i — bin0 =
+    (-inf, e0], bin_i = (e_{i-1}, e_i], bin_last = (e_last, inf)."""
+    c = sql_ident(col)
     out = []
+    if count is not None:
+        out.append(F.expr(f"sum(CAST({c} IS NOT NULL AS BIGINT)) AS {quote_ident(count)}"))
     lo = None
     for i, e in enumerate(list(edges) + [None]):
         if lo is None and e is not None:
-            ind = col <= F.lit(e)
+            ind = f"{c} <= {sql_literal(e)}"
         elif e is not None:
-            ind = (col > F.lit(lo)) & (col <= F.lit(e))
+            ind = f"{c} > {sql_literal(lo)} AND {c} <= {sql_literal(e)}"
         else:
-            ind = col > F.lit(lo)
-        out.append(F.sum(ind.cast("long")).alias(f"__bin_{i}"))
+            ind = f"{c} > {sql_literal(lo)}"
+        out.append(F.expr(f"sum(CAST({ind} AS BIGINT)) AS {quote_ident(f'{prefix}{i}')}"))
         lo = e
     return out
+
+
+# SQL text of the per-partition statistics over the binned aggregates.
+# ``b(i)`` is the SQL reference to bin i's count, ``n`` the row count as
+# a double. Every fold runs left to right in a fixed order, and the
+# parentheses pin the expression tree, so a statistic is bit-identical
+# wherever it is computed.
+
+_N = "CAST(greatest(`__n`, 1) AS DOUBLE)"
+
+
+def _psi_term(b: str, n: str, q) -> str:
+    """(p - q)·(ln p - ln q) with p = max(b / n, EPS)."""
+    p = f"greatest({b} / {n}, {sql_literal(EPS)})"
+    q = sql_literal(q)
+    return f"(({p} - {q}) * (ln({p}) - ln({q})))"
+
+
+def _psi_sql(b, n: str, q_props: Sequence[float]) -> str:
+    return " + ".join(_psi_term(b(i), n, q) for i, q in enumerate(q_props))
+
+
+def _ks_sql(b, n: str, q_cdf: Sequence[float]) -> str:
+    """max over edges of |CDF_part(e) - CDF_base(e)|."""
+    ks = acc = None
+    for i, qc in enumerate(q_cdf):
+        p = f"({b(i)} / {n})"
+        acc = p if acc is None else f"({acc} + {p})"
+        gap = f"abs({acc} - {sql_literal(qc)})"
+        ks = gap if ks is None else f"greatest({ks}, {gap})"
+    return ks
+
+
+def _w1_sql(b, n_raw: str, edges: Sequence[float], counts: Sequence[int], n_base: int) -> str:
+    """Grid-W1 with integer cumulative counts (see
+    ``wasserstein_by_partition``); ``n_raw`` is the row count as a long."""
+    terms = cum = None
+    cumq = 0
+    for i in range(len(edges) - 1):
+        cum = b(i) if cum is None else f"({cum} + {b(i)})"
+        cumq += int(counts[i])
+        num = (
+            f"CAST(abs({cum} * {sql_literal(int(n_base))} - "
+            f"{sql_literal(cumq)} * {n_raw}) AS DOUBLE)"
+        )
+        t = f"({num} * {sql_literal(float(edges[i + 1] - edges[i]))})"
+        terms = t if terms is None else f"({terms} + {t})"
+    return (
+        f"CASE WHEN {n_raw} > 0 THEN {terms} / "
+        f"(CAST({n_raw} AS DOUBLE) * {sql_literal(float(n_base))}) ELSE 0.0D END"
+    )
+
+
+def _bin(i: int) -> str:
+    return f"`__bin_{i}`"
 
 
 def baseline_summary(
@@ -70,9 +137,8 @@ def baseline_summary(
     if edges is None:
         edges = quantile_edges(df, col, bins)
     edges = [float(e) for e in edges]
-    c = F.col(col)
-    row = df.where(c.isNotNull()).agg(
-        F.count(F.lit(1)).alias("n"), *_bin_exprs(c, edges)
+    row = df.where(f"{sql_ident(col)} IS NOT NULL").agg(
+        F.expr("count(1) AS n"), *_bin_exprs(col, edges, count=None)
     ).collect()[0]
     n = row["n"] or 1
     props = [max(row[f"__bin_{i}"] / n, EPS) for i in range(len(edges) + 1)]
@@ -107,34 +173,16 @@ def drift_by_partition(
     PSI = Σ_bins (p_i - q_i) · ln(p_i / q_i)   (q = baseline)
     KS  = max_edges |CDF_part(e) - CDF_base(e)|  (max CDF gap over the
           shared quantile grid — the sketch-based KS approximation)
-    """
-    edges, q_props, q_cdf = baseline["edges"], baseline["props"], baseline["cdf"]
-    c = F.col(col)
-    nn = c.isNotNull()
-    aggs = [F.sum(nn.cast("long")).alias("__n")] + _bin_exprs(
-        F.when(nn, c), edges
-    )
-    g = df.groupBy(*partition_cols).agg(*aggs)
 
-    n = F.greatest(F.col("__n"), F.lit(1)).cast("double")
-    psi = None
-    for i, q in enumerate(q_props):
-        p = F.greatest(F.col(f"__bin_{i}") / n, F.lit(EPS))
-        term = (p - F.lit(q)) * (F.log(p) - F.log(F.lit(q)))
-        psi = term if psi is None else psi + term
-
-    ks = None
-    acc = None
-    for i, qc in enumerate(q_cdf):
-        acc = F.col(f"__bin_{i}") / n if acc is None else acc + F.col(f"__bin_{i}") / n
-        gap = F.abs(acc - F.lit(qc))
-        ks = gap if ks is None else F.greatest(ks, gap)
-
+    The aggregates and both statistics are SQL text, one ``F.expr``
+    each, so building the frame costs a few dozen py4j round trips
+    whatever the bin count."""
+    g = df.groupBy(*partition_cols).agg(*_bin_exprs(col, baseline["edges"]))
     return g.select(
         *partition_cols,
-        F.col("__n").alias("n"),
-        psi.alias("psi"),
-        ks.alias("ks"),
+        F.expr("`__n` AS n"),
+        F.expr(f"{_psi_sql(_bin, _N, baseline['props'])} AS psi"),
+        F.expr(f"{_ks_sql(_bin, _N, baseline['cdf'])} AS ks"),
     )
 
 
@@ -151,7 +199,9 @@ def drift_verdicts(
     d = drift_by_partition(df, col, partition_cols, baseline)
     return d.withColumn(
         "drifted",
-        (F.col("psi") >= F.lit(psi_threshold)) | (F.col("ks") >= F.lit(ks_threshold)),
+        F.expr(
+            f"`psi` >= {sql_literal(psi_threshold)} OR `ks` >= {sql_literal(ks_threshold)}"
+        ),
     )
 
 
@@ -206,37 +256,9 @@ def wasserstein_by_partition(
         )
     if any(later <= earlier for later, earlier in zip(edges[1:], edges)):
         raise ValueError(f"edges must be strictly increasing, got {edges}")
-    cumq = []
-    acc = 0
-    for cnt in counts[:-1]:
-        acc += int(cnt)
-        cumq.append(acc)
-
-    c = F.col(col)
-    nn = c.isNotNull()
-    aggs = [F.sum(nn.cast("long")).alias("__n")] + _bin_exprs(
-        F.when(nn, c), edges
-    )
-    g = df.groupBy(*partition_cols).agg(*aggs)
-
-    terms = None
-    cum = None
-    for i in range(len(edges) - 1):
-        b = F.col(f"__bin_{i}")
-        cum = b if cum is None else cum + b
-        gap = float(edges[i + 1] - edges[i])
-        num = F.abs(
-            cum * F.lit(int(n_base)) - F.lit(int(cumq[i])) * F.col("__n")
-        ).cast("double")
-        t = num * F.lit(gap)
-        terms = t if terms is None else terms + t
-    w1 = F.when(
-        F.col("__n") > 0,
-        terms / (F.col("__n").cast("double") * F.lit(float(n_base))),
-    ).otherwise(F.lit(0.0))
-    return g.select(
-        *partition_cols, F.col("__n").alias("n"), w1.alias("w1")
-    )
+    g = df.groupBy(*partition_cols).agg(*_bin_exprs(col, edges))
+    w1 = _w1_sql(_bin, "`__n`", edges, counts, n_base)
+    return g.select(*partition_cols, F.expr("`__n` AS n"), F.expr(f"{w1} AS w1"))
 
 
 def w1_of(p_counts: Sequence[int], q_counts: Sequence[int], edges: Sequence[float]) -> float:
@@ -403,7 +425,7 @@ def table_drift_report(
             f"table_drift_report: columns not in frame: {missing}"
         )
     aggs = []
-    metas = {}
+    structs = []
     for c, baseline in baselines.items():
         edges = [float(e) for e in baseline["edges"]]
         counts = baseline.get("counts")
@@ -417,63 +439,23 @@ def table_drift_report(
             raise ValueError(
                 f"table_drift_report: baseline for {c!r} needs >=2 edges"
             )
-        col = F.col(c)
-        nn = col.isNotNull()
-        aggs.append(F.sum(nn.cast("long")).alias(f"__n__{c}"))
-        for i, e in enumerate(_bin_exprs(F.when(nn, col), edges)):
-            aggs.append(e.alias(f"__b__{c}__{i}"))
-        metas[c] = (edges, baseline["props"], baseline["cdf"], counts, int(n_base))
-    wide = df.agg(*aggs)
+        aggs += _bin_exprs(c, edges, count=f"__n__{c}", prefix=f"__b__{c}__")
 
-    structs = []
-    for c, (edges, q_props, q_cdf, q_counts, n_base) in metas.items():
-        nb = len(edges) + 1
-        n_raw = F.col(f"__n__{c}")
-        n = F.greatest(n_raw, F.lit(1)).cast("double")
-        psi = None
-        for i, q in enumerate(q_props):
-            p = F.greatest(F.col(f"__b__{c}__{i}") / n, F.lit(EPS))
-            term = (p - F.lit(q)) * (F.log(p) - F.log(F.lit(q)))
-            psi = term if psi is None else psi + term
-        ks = None
-        acc = None
-        for i, qc in enumerate(q_cdf):
-            b = F.col(f"__b__{c}__{i}") / n
-            acc = b if acc is None else acc + b
-            gap = F.abs(acc - F.lit(qc))
-            ks = gap if ks is None else F.greatest(ks, gap)
-        cumq = []
-        qa = 0
-        for cnt in q_counts[:-1]:
-            qa += int(cnt)
-            cumq.append(qa)
-        w1_terms = None
-        cum = None
-        for i in range(len(edges) - 1):
-            b = F.col(f"__b__{c}__{i}")
-            cum = b if cum is None else cum + b
-            gap = float(edges[i + 1] - edges[i])
-            num = F.abs(
-                cum * F.lit(int(n_base)) - F.lit(int(cumq[i])) * n_raw
-            ).cast("double")
-            t = num * F.lit(gap)
-            w1_terms = t if w1_terms is None else w1_terms + t
-        w1 = F.when(
-            n_raw > 0,
-            w1_terms / (n_raw.cast("double") * F.lit(float(n_base))),
-        ).otherwise(F.lit(0.0))
+        def b(i, c=c):
+            return quote_ident(f"__b__{c}__{i}")
+
+        n_raw = quote_ident(f"__n__{c}")
+        n = f"CAST(greatest({n_raw}, 1) AS DOUBLE)"
         structs.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                n_raw.alias("n"),
-                psi.alias("psi"),
-                ks.alias("ks"),
-                w1.alias("w1"),
-            )
+            f"struct({sql_literal(c)} AS `column`, {n_raw} AS n, "
+            f"{_psi_sql(b, n, baseline['props'])} AS psi, "
+            f"{_ks_sql(b, n, baseline['cdf'])} AS ks, "
+            f"{_w1_sql(b, n_raw, edges, counts, n_base)} AS w1)"
         )
-    return wide.select(F.explode(F.array(*structs)).alias("__r")).select(
-        "__r.*"
-    )
+    wide = df.agg(*aggs)
+    return wide.select(
+        F.expr(f"explode(array({', '.join(structs)})) AS __r")
+    ).select("__r.*")
 
 
 def drift_attribution(df: DataFrame, col: str, baseline: dict) -> DataFrame:
@@ -492,32 +474,18 @@ def drift_attribution(df: DataFrame, col: str, baseline: dict) -> DataFrame:
     1-row frame — O(bins) output, one scan, no UDF. Global by design:
     run it on the slice a partitioned score already flagged."""
     edges, q_props = baseline["edges"], baseline["props"]
-    c = F.col(col)
-    nn = c.isNotNull()
-    g = df.agg(
-        F.sum(nn.cast("long")).alias("__n"),
-        *_bin_exprs(F.when(nn, c), edges),
-    )
-    n = F.greatest(F.col("__n"), F.lit(1)).cast("double")
+    g = df.agg(*_bin_exprs(col, edges))
     structs = []
     for i, q in enumerate(q_props):
-        p_raw = F.col(f"__bin_{i}") / n
-        p = F.greatest(p_raw, F.lit(EPS))
-        term = (p - F.lit(q)) * (F.log(p) - F.log(F.lit(q)))
         lo = None if i == 0 else float(edges[i - 1])
         hi = None if i == len(edges) else float(edges[i])
         structs.append(
-            F.struct(
-                F.lit(i).alias("bin"),
-                F.lit(lo).cast("double").alias("lo"),
-                F.lit(hi).cast("double").alias("hi"),
-                F.col(f"__bin_{i}").cast("long").alias("n_rows"),
-                p_raw.alias("p_cur"),
-                F.lit(float(q)).alias("q_base"),
-                term.alias("psi_term"),
-            )
+            f"struct({i} AS bin, CAST({sql_literal(lo)} AS DOUBLE) AS lo, "
+            f"CAST({sql_literal(hi)} AS DOUBLE) AS hi, "
+            f"CAST({_bin(i)} AS BIGINT) AS n_rows, ({_bin(i)} / {_N}) AS p_cur, "
+            f"{sql_literal(float(q))} AS q_base, {_psi_term(_bin(i), _N, q)} AS psi_term)"
         )
-    return g.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return g.select(F.expr(f"explode(array({', '.join(structs)})) AS s")).select("s.*")
 
 
 def surprise_scores(
@@ -774,12 +742,7 @@ def importance_weight_bins(
     if col not in df.columns:
         raise ValueError(f"importance_weight_bins: column {col!r} missing")
     edges, q_props = target["edges"], target["props"]
-    c = F.col(col)
-    nn = c.isNotNull()
-    aggs = [F.sum(nn.cast("long")).alias("__n")] + _bin_exprs(
-        F.when(nn, c), edges
-    )
-    one = df.agg(*aggs)
+    one = df.agg(*_bin_exprs(col, edges))
     nbins = len(q_props)
     counts = F.array(*[F.col(f"__bin_{i}") for i in range(nbins)])
     tprops = F.array(*[F.lit(float(p)) for p in q_props])

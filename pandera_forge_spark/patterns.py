@@ -22,6 +22,8 @@ from typing import Iterable, Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pandera_forge_spark.checks import quote_ident, sql_ident, sql_literal
+
 # Ordered most-specific → least-specific; order is load-bearing
 # (first >= threshold match wins, reference: pattern_detector.py:69-75).
 NAMED_PATTERNS: dict[str, str] = {
@@ -61,11 +63,17 @@ def match_ratio_expr(col: Column, pattern: str) -> Column:
     return F.avg(s.rlike("(?i)" + pattern).cast("double"))
 
 
-def pattern_ratio_exprs(col: Column, colname: str) -> list[Column]:
-    """All 17 named-pattern ratio aggregates for one string column,
-    aliased ``{colname}__pat__{pattern_name}`` for the fused agg pass."""
+def pattern_ratio_exprs(colname: str) -> list[Column]:
+    """All 17 named-pattern ratio aggregates for the string column
+    ``colname`` (a name as ``F.col`` reads it), aliased
+    ``{colname}__pat__{pattern_name}`` for the fused agg pass. Each is
+    ``match_ratio_expr``'s aggregate as SQL text under one ``F.expr``."""
+    s = f"CAST({sql_ident(colname)} AS STRING)"
     return [
-        match_ratio_expr(col, rx).alias(f"{colname}__pat__{name}")
+        F.expr(
+            f"avg(CAST({s} RLIKE {sql_literal('(?i)' + rx)} AS DOUBLE)) "
+            f"AS {quote_ident(f'{colname}__pat__{name}')}"
+        )
         for name, rx in NAMED_PATTERNS.items()
     ]
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pandera_forge_spark.checks import quote_ident, sql_ident, sql_literal
 from pandera_forge_spark.patterns import (
     NAMED_PATTERNS,
     PREFIX_SUFFIX_PROBE,
@@ -76,35 +77,31 @@ def stat_exprs(
     exact_distinct: bool,
     detect_patterns: bool,
 ) -> list:
-    """Build the fused aggregate-expression list for JOB 1."""
-    exprs = [F.count(F.lit(1)).alias("__total__")]
+    """Build the fused aggregate-expression list for JOB 1: one
+    ``F.expr`` over SQL text per aggregate (3 py4j round trips each;
+    the same aggregate built node by node with the Column API cost
+    ~10x that — see the checks module docstring)."""
+    exprs = [F.expr("count(1) AS __total__")]
     dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
     for c in columns:
         dt = dtypes[c]
-        col = F.col(c)
-        exprs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
+        col = sql_ident(c)
+        aggs = [(f"sum(CAST({col} IS NULL AS BIGINT))", "nulls")]
         if _is_simple(dt):
-            d = (
-                F.countDistinct(col)
-                if exact_distinct
-                else F.approx_count_distinct(col)
-            )
-            exprs.append(d.alias(f"{c}__distinct"))
+            d = f"count(DISTINCT {col})" if exact_distinct else f"approx_count_distinct({col})"
+            aggs.append((d, "distinct"))
         if _is_numeric(dt):
-            exprs += [
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-                F.avg(col).alias(f"{c}__mean"),
-                F.stddev(col).alias(f"{c}__stddev"),
+            aggs += [
+                (f"min({col})", "min"),
+                (f"max({col})", "max"),
+                (f"avg({col})", "mean"),
+                (f"stddev({col})", "stddev"),
             ]
         elif isinstance(dt, ORDERED_EXTRA):
-            exprs += [F.min(col).alias(f"{c}__min"), F.max(col).alias(f"{c}__max")]
+            aggs += [(f"min({col})", "min"), (f"max({col})", "max")]
         if _is_string(dt):
-            s = col.cast("string")
-            exprs += [
-                F.min(F.length(s)).alias(f"{c}__minlen"),
-                F.max(F.length(s)).alias(f"{c}__maxlen"),
-            ]
+            s = f"CAST({col} AS STRING)"
+            aggs += [(f"min(length({s}))", "minlen"), (f"max(length({s}))", "maxlen")]
             # prefix/suffix probes: if all non-null values share their
             # first (last) 3 chars, that substring IS the common
             # prefix/suffix (reference: pattern_detector.py:115-128).
@@ -112,16 +109,17 @@ def stat_exprs(
             # countDistinct — every countDistinct in a multi-distinct
             # agg adds an Expand group (row blow-up × #distinct-aggs
             # before partial agg), which measured 3-6x slower here.
-            pre = F.substring(s, 1, PREFIX_SUFFIX_PROBE)
-            suf = F.substring(s, -PREFIX_SUFFIX_PROBE, PREFIX_SUFFIX_PROBE)
-            exprs += [
-                F.min(pre).alias(f"{c}__pre_min"),
-                F.max(pre).alias(f"{c}__pre_max"),
-                F.min(suf).alias(f"{c}__suf_min"),
-                F.max(suf).alias(f"{c}__suf_max"),
+            pre = f"substring({s}, 1, {PREFIX_SUFFIX_PROBE})"
+            suf = f"substring({s}, -{PREFIX_SUFFIX_PROBE}, {PREFIX_SUFFIX_PROBE})"
+            aggs += [
+                (f"min({pre})", "pre_min"),
+                (f"max({pre})", "pre_max"),
+                (f"min({suf})", "suf_min"),
+                (f"max({suf})", "suf_max"),
             ]
-            if detect_patterns:
-                exprs += pattern_ratio_exprs(col, c)
+        exprs += [F.expr(f"{a} AS {quote_ident(f'{c}__{k}')}") for a, k in aggs]
+        if detect_patterns and _is_string(dt):
+            exprs += pattern_ratio_exprs(c)
     return exprs
 
 
@@ -133,7 +131,7 @@ def pattern_stat_exprs(df: DataFrame, columns: Sequence[str]) -> list:
     exprs: list = []
     for c in columns:
         if _is_string(dtypes[c]):
-            exprs += pattern_ratio_exprs(F.col(c), c)
+            exprs += pattern_ratio_exprs(c)
     return exprs
 
 
@@ -270,31 +268,31 @@ def topk_frame(
     the engine path itself can be oracle-anchored and benchmarked as a
     DataFrame, not just via its collected dict form."""
     pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"),
-                        F.col(c).cast("string").alias("val"),
-                    )
-                    for c in cols
-                ]
+        F.expr(
+            "explode(array("
+            + ", ".join(
+                f"struct({sql_literal(c)} AS col, CAST({sql_ident(c)} AS STRING) AS val)"
+                for c in cols
             )
-        ).alias("p")
+            + ")) AS p"
+        )
     ).select("p.col", "p.val")
-    counts = pairs.where(F.col("val").isNotNull()).groupBy("col", "val").count()
+    counts = pairs.where("val IS NOT NULL").groupBy("col", "val").count()
 
     # struct sorts field-wise ascending, so (-count, val) == count
     # desc, val asc
-    entry = F.struct((-F.col("count")).alias("negcnt"), F.col("val").alias("val"))
-    salt = F.pmod(F.xxhash64("val"), F.lit(TOPK_SALT_BUCKETS))
-    partial = counts.groupBy(F.col("col"), salt.alias("__salt")).agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.slice(F.array_sort(F.collect_list(entry)), 1, k).alias("cand"),
+    partial = counts.groupBy(
+        F.col("col"), F.expr(f"pmod(xxhash64(val), {TOPK_SALT_BUCKETS}) AS __salt")
+    ).agg(
+        F.expr("count(1) AS nd"),
+        F.expr(
+            "slice(array_sort(collect_list(struct(-`count` AS negcnt, val AS val))), "
+            f"1, {int(k)}) AS cand"
+        ),
     )
     return partial.groupBy("col").agg(
-        F.sum("nd").alias("n_distinct"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("cand"))), 1, k).alias("topk"),
+        F.expr("sum(nd) AS n_distinct"),
+        F.expr(f"slice(array_sort(flatten(collect_list(cand))), 1, {int(k)}) AS topk"),
     )
 
 

@@ -19,6 +19,17 @@ committed (parquet _SUCCESS marker / Iceberg snapshot). Work restarts
 skip done partitions (anti-join of manifest against the audit table);
 per-partition writes are overwrite-idempotent, so a partition killed
 mid-write is simply redone with identical results — no double count.
+
+Read semantics: a ``run_partitions`` pass reads the table as of its own
+manifest listing. ``HivePartitionedParquet`` builds its base scan (file
+listing plus parquet schema inference) once after each listing and
+every batch of the pass filters that one scan; the next pass lists
+again and so sees partitions written in between.
+
+Driver cost: the table and the audit log each hold one ``DriverFS``
+(the Hadoop ``Path`` class and configuration resolved once), the
+manifest is one ``listStatus``, and a commit is three metadata calls —
+clear stale files, write the rows, touch ``_SUCCESS``.
 """
 
 from __future__ import annotations
@@ -39,61 +50,75 @@ AUDIT_SCHEMA = (
 
 class HivePartitionedParquet:
     """Partition-manifest + pruned reads over a hive-layout parquet dir
-    (``<root>/<col>=<val>/...``)."""
+    (``<root>/<col>=<val>/...``).
+
+    Reads come from one base scan per manifest listing: the first read
+    after ``list_partitions()`` lists the files and infers the schema
+    once, and every later read until the next listing filters that same
+    snapshot (no per-batch partition discovery or schema-inference
+    job). ``list_partitions()`` and ``write()`` drop the snapshot, so a
+    ``run_partitions`` pass reads the data as of its own listing — a
+    partition written between two passes is seen by the second."""
 
     def __init__(self, spark: SparkSession, root: str, partition_col: str):
+        from pandera_forge_spark.sources.fs import DriverFS
+
         self.spark = spark
         self.root = root
         self.partition_col = partition_col
+        self._fs = DriverFS(spark)
+        self._scan: Optional[DataFrame] = None
 
     MAX_MANIFEST = 1_000_000
 
     def list_partitions(self) -> list[str]:
         """The partition manifest. Directory listing — O(partitions),
         no data scan (Iceberg equivalent: the `partitions` metadata
-        table). Scheme-aware: works on s3a://, hdfs://, local paths
-        alike (DriverFS routes through Hadoop's FileSystem).
+        table): one ``listStatus`` call, directory flags included.
+        Scheme-aware: works on s3a://, hdfs://, local paths alike
+        (DriverFS routes through Hadoop's FileSystem). Drops the base
+        scan, so the next read sees the table as of this listing.
 
-        Loudly fenced at ``MAX_MANIFEST`` entries: a manifest is meant
-        to be 10^4-10^5 operational partitions; a per-key layout (one
-        directory per URL/doc) would make every runner pass O(corpus)
-        driver work — that layout belongs in Iceberg metadata tables
-        (``IcebergTable``), not hive directories."""
-        from pandera_forge_spark.sources.fs import DriverFS
-
-        fs = DriverFS(self.spark)
+        Loudly fenced at ``MAX_MANIFEST`` partition directories (plain
+        files at the root, such as ``_SUCCESS``, are not counted): a
+        manifest is meant to be 10^4-10^5 operational partitions; a
+        per-key layout (one directory per URL/doc) would make every
+        runner pass O(corpus) driver work — that layout belongs in
+        Iceberg metadata tables (``IcebergTable``), not hive
+        directories."""
+        self._scan = None
         prefix = f"{self.partition_col}="
-        names = fs.listdir(self.root)
+        names = [n for n in self._fs.list_dirs(self.root) if n.startswith(prefix)]
         if len(names) > self.MAX_MANIFEST:
             raise ValueError(
-                f"{len(names)} entries under {self.root} exceed the "
-                f"{self.MAX_MANIFEST} manifest fence — this layout is "
+                f"{len(names)} partition directories under {self.root} exceed "
+                f"the {self.MAX_MANIFEST} manifest fence — this layout is "
                 "per-key, not per-partition; use the IcebergTable binding "
                 "or repartition the table"
             )
-        return sorted(
-            name.split("=", 1)[1]
-            for name in names
-            if name.startswith(prefix) and fs.is_dir(f"{self.root}/{name}")
-        )
+        return sorted(name.split("=", 1)[1] for name in names)
 
     def _read(self) -> DataFrame:
         """Base scan with the partition column read back as its RAW
-        directory string. Hive partition-type inference is deliberately
+        directory string, built on first use after a listing and reused
+        until the next one. Hive partition-type inference is deliberately
         disabled for this read: a zero-padded value like ``day=00123``
         otherwise infers as int 123, and its str() no longer matches
         the manifest/audit key — the silent rows=0 false-pass the audit
         log must never produce. Keeping the column a string makes the
         manifest, the pruning filter, the verdict key and the audit key
         one and the same value."""
+        if self._scan is not None:
+            return self._scan
         inference_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
         prev = self.spark.conf.get(inference_key, "true")
         self.spark.conf.set(inference_key, "false")
         try:
             # schema (incl. partition discovery) resolves eagerly here
-            return self.spark.read.option("basePath", self.root).parquet(self.root)
+            self._scan = self.spark.read.option("basePath", self.root).parquet(self.root)
         finally:
             self.spark.conf.set(inference_key, prev)
+        return self._scan
 
     def read_partition(self, value: str) -> DataFrame:
         """Partition-pruned read: the filter on the partition column is
@@ -109,7 +134,10 @@ class HivePartitionedParquet:
         return self._read().where(F.col(self.partition_col).isin(list(values)))
 
     def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+        """Write ``df`` partitioned by the partition column, then drop
+        the base scan so the next read sees the new files."""
         df.write.partitionBy(self.partition_col).mode(mode).parquet(self.root)
+        self._scan = None
 
 
 class IcebergTable:
@@ -162,13 +190,14 @@ class AuditLog:
     partition (idempotent overwrite into ``audit/partition=<val>``)."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-
-    def completed_partitions(self) -> set[str]:
         from pandera_forge_spark.sources.fs import DriverFS
 
-        fs = DriverFS(self.spark)
+        self.spark = spark
+        self.root = root
+        self._fs = DriverFS(spark)
+
+    def completed_partitions(self) -> set[str]:
+        fs = self._fs
         return {
             name.split("=", 1)[1]
             for name in fs.listdir(self.root)
@@ -186,15 +215,15 @@ class AuditLog:
         (stale files cleared first, _SUCCESS last), preserving the
         commit protocol resume depends on, and goes through the
         Hadoop FileSystem (DriverFS) so ``--audit s3a://...`` works the
-        same as a local path. The Iceberg binding replaces this with
+        same as a local path; the file write creates the partition
+        directory. The Iceberg binding replaces this with
         ``writeTo(audit).overwritePartitions()``."""
         import pyarrow as pa
 
-        from pandera_forge_spark.sources.fs import DriverFS, write_parquet_bytes
+        from pandera_forge_spark.sources.fs import write_parquet_bytes
 
-        fs = DriverFS(self.spark)
+        fs = self._fs
         d = f"{self.root}/partition={partition}"
-        fs.mkdirs(d)
         fs.clear_files(d)
         tbl = pa.table(
             {

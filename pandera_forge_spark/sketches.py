@@ -1151,10 +1151,7 @@ def histogram_sketch(
     if col not in df.columns:
         raise ValueError(f"histogram_sketch: column {col!r} not in frame")
     keys = list(group_cols)
-    c = F.col(col)
-    aggs = [F.sum(c.isNotNull().cast("long")).alias("n")] + _bin_exprs(
-        F.when(c.isNotNull(), c), edges
-    )
+    aggs = _bin_exprs(col, edges, count="n")
     g = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
     renames = [F.col(f"__bin_{i}").alias(f"b{i}") for i in range(len(edges) + 1)]
     return g.select(*keys, F.coalesce(F.col("n"), F.lit(0)).alias("n"), *renames)

@@ -15,6 +15,12 @@ Hadoop FileSystem the executors use (via the py4j gateway —
 cluster can write, the metadata commits can too. When no JVM gateway is
 reachable (Spark Connect client), it falls back to pathlib and raises
 loudly for non-local schemes instead of mangling them.
+
+Every call is a handful of py4j round trips (a few ms each on a busy
+driver), so the facade keeps them few: an instance resolves the Hadoop
+``Path`` class and configuration once, ``list_dirs`` reads directory
+flags from the same ``listStatus`` call, and ``write_bytes`` relies on
+``create`` making parent directories instead of a separate ``mkdirs``.
 """
 
 from __future__ import annotations
@@ -30,26 +36,34 @@ def _is_remote(path: str) -> bool:
 
 
 class DriverFS:
-    """Minimal FS facade: exists / listdir / mkdirs / delete /
+    """Minimal FS facade: exists / listdir / list_dirs / mkdirs / delete /
     read_bytes / write_bytes / touch, resolved through Hadoop's
     FileSystem when a JVM is attached (classic driver), pathlib
-    otherwise (Spark Connect local paths only)."""
+    otherwise (Spark Connect local paths only).
+
+    An instance looks up the Hadoop ``Path`` class and the session's
+    Hadoop configuration once: walking ``jvm.org.apache.hadoop.fs.Path``
+    is a chain of py4j reflection round trips, which cost more than the
+    metadata call itself when paid per call. Hold one instance per
+    long-lived owner (the runner's table and audit log each do)."""
 
     def __init__(self, spark):
         self.spark = spark
         self._jvm = getattr(spark, "_jvm", None)
-        self._jsc = getattr(spark, "_jsc", None) if self._jvm is not None else None
+        jsc = getattr(spark, "_jsc", None) if self._jvm is not None else None
+        self._path_cls = self._conf = None
+        if jsc is not None:
+            self._path_cls = self._jvm.org.apache.hadoop.fs.Path
+            self._conf = jsc.hadoopConfiguration()
 
     # ---------------------------------------------------------- routing
 
     def _hadoop(self, path: str):
         """(FileSystem, Path) pair for this path, or None if no JVM."""
-        if self._jvm is None or self._jsc is None:
+        if self._path_cls is None:
             return None
-        jpath = self._jvm.org.apache.hadoop.fs.Path(path)
-        conf = self._jsc.hadoopConfiguration()
-        fs = jpath.getFileSystem(conf)
-        return fs, jpath
+        jpath = self._path_cls(path)
+        return jpath.getFileSystem(self._conf), jpath
 
     def _local(self, path: str) -> Path:
         if _is_remote(path):
@@ -79,12 +93,19 @@ class DriverFS:
         p = self._local(path)
         return [c.name for c in p.iterdir()] if p.exists() else []
 
-    def is_dir(self, path: str) -> bool:
+    def list_dirs(self, path: str) -> list[str]:
+        """Basenames of the child DIRECTORIES of a directory ([] if it
+        does not exist): one listing, plain files left out."""
         h = self._hadoop(path)
         if h is not None:
             fs, p = h
-            return bool(fs.exists(p)) and bool(fs.getFileStatus(p).isDirectory())
-        return self._local(path).is_dir()
+            if not fs.exists(p):
+                return []
+            return [
+                st.getPath().getName() for st in fs.listStatus(p) if st.isDirectory()
+            ]
+        p = self._local(path)
+        return [c.name for c in p.iterdir() if c.is_dir()] if p.exists() else []
 
     def mkdirs(self, path: str) -> None:
         h = self._hadoop(path)
@@ -196,6 +217,8 @@ class DriverFS:
                     f.unlink()
 
     def write_bytes(self, path: str, data: bytes) -> None:
+        """Create or overwrite a file, making missing parent directories
+        (Hadoop's ``create`` does; the pathlib fallback does the same)."""
         h = self._hadoop(path)
         if h is not None:
             fs, p = h
@@ -205,7 +228,9 @@ class DriverFS:
             finally:
                 out.close()
             return
-        self._local(path).write_bytes(data)
+        lp = self._local(path)
+        lp.parent.mkdir(parents=True, exist_ok=True)
+        lp.write_bytes(data)
 
     def read_bytes(self, path: str) -> bytes:
         h = self._hadoop(path)

@@ -200,7 +200,14 @@ def stream_drift_bh(
             "stream_drift_bh: baseline lacks a positive row count — build "
             "it with the round-5 baseline_summary() on a non-empty frame"
         )
-    from pandera_forge_spark.drift import _bin_exprs, bh_adjust, ks_pvalue
+    from pandera_forge_spark.drift import (
+        _N,
+        _bin,
+        _bin_exprs,
+        _ks_sql,
+        bh_adjust,
+        ks_pvalue,
+    )
     from pandera_forge_spark.operators.temporal import _check_reserved
 
     _check_reserved(
@@ -212,12 +219,7 @@ def stream_drift_bh(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        c = F.col(value_col)
-        nn = c.isNotNull()
-        bs = batch_df.groupBy(*keys).agg(
-            F.sum(nn.cast("long")).alias("__n"),
-            *_bin_exprs(F.when(nn, c), edges),
-        )
+        bs = batch_df.groupBy(*keys).agg(*_bin_exprs(value_col, edges))
         prior = _prior_epoch_bins(batch_df.sparkSession, state_dir, e)
         all_rows = (
             bs if prior is None else bs.unionByName(prior.select(*bs.columns))
@@ -226,21 +228,10 @@ def stream_drift_bh(
             F.sum("__n").alias("__n"),
             *[F.sum(f"__bin_{i}").alias(f"__bin_{i}") for i in range(nbins)],
         )
-        n = F.greatest(F.col("__n"), F.lit(1)).cast("double")
-        ks = None
-        acc = None
-        for i, qc in enumerate(q_cdf):
-            acc = (
-                F.col(f"__bin_{i}") / n
-                if acc is None
-                else acc + F.col(f"__bin_{i}") / n
-            )
-            gap = F.abs(acc - F.lit(qc))
-            ks = gap if ks is None else F.greatest(ks, gap)
         scored = merged.select(
             *keys,
-            F.col("__n").cast("long").alias("n"),
-            ks.alias("ks"),
+            F.expr("CAST(`__n` AS BIGINT) AS n"),
+            F.expr(f"{_ks_sql(_bin, _N, q_cdf)} AS ks"),
         ).withColumn(
             "p", ks_pvalue(F.col("ks"), F.col("n"), F.lit(m_base))
         )

@@ -28,6 +28,8 @@ from pandera_forge_spark.checks import (
     compile_check,
     quote_ident,
     row_level,
+    sql_ident,
+    sql_literal,
     table_level,
 )
 from pandera_forge_spark.schema import Check, TableSchema
@@ -157,9 +159,13 @@ def quarantine_split(
     from pyspark.sql import Observation
 
     checks = row_level(schema.checks())
-    ok = F.lit(True)
+    # one SQL text for every SQL-expressible predicate; only a
+    # custom_pandas check (a pandas UDF) joins as a Column
+    sql = [f"({check_sql(c)})" for c in checks if c.kind != "custom_pandas"]
+    ok = F.expr(" AND ".join(["true", *sql]))
     for c in checks:
-        ok = ok & compile_check(c)
+        if c.kind == "custom_pandas":
+            ok = ok & compile_check(c)
 
     obs = Observation("quarantine_split")
     flagged = df.withColumn("__valid", ok).observe(
@@ -210,32 +216,29 @@ def violation_rows(
     # check would otherwise run its Arrow UDF twice — once in the
     # pushdown filter, once in the melted array — and duplicate
     # attribute names confuse the UDF-extraction rewrite)
-    flag_cols = [(~compile_check(c)).alias(f"__failed_{i}") for i, c in enumerate(checks)]
+    flag_cols = [
+        (~compile_check(c)).alias(f"__failed_{i}")
+        if c.kind == "custom_pandas"
+        else F.expr(f"NOT ({check_sql(c)}) AS `__failed_{i}`")
+        for i, c in enumerate(checks)
+    ]
     flagged = df.select(*df.columns, *flag_cols)
-    any_failed = None
-    for i in range(len(checks)):
-        f = F.col(f"__failed_{i}")
-        any_failed = f if any_failed is None else (any_failed | f)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(c.name).alias("check"),
-                F.col(c.column).cast("string").alias("value"),
-                F.col(f"__failed_{i}").alias("failed"),
-            )
-            for i, c in enumerate(checks)
-        ]
+    any_failed = " OR ".join(f"`__failed_{i}`" for i in range(len(checks)))
+    entries = ", ".join(
+        f"struct({sql_literal(c.name)} AS `check`, CAST({sql_ident(c.column)} AS STRING) "
+        f"AS `value`, `__failed_{i}` AS failed)"
+        for i, c in enumerate(checks)
     )
     bad = (
         flagged.where(any_failed)
         .select(
             *id_cols,
-            F.explode(F.filter(entries, lambda e: e["failed"])).alias("__viol"),
+            F.expr(f"explode(filter(array({entries}), __e -> __e.failed)) AS __viol"),
         )
         .select(
             *id_cols,
-            F.col("__viol.check").alias("check"),
-            F.col("__viol.value").alias("value"),
+            F.expr("__viol.`check` AS `check`"),
+            F.expr("__viol.`value` AS `value`"),
         )
     )
     if max_per_check is not None:

@@ -307,26 +307,14 @@ def _lineitem_checks():
     return out + [Check("l_shipdate", "not_null")]
 
 
-def test_violation_count_exprs_round_trips_per_check(spark):
+def test_violation_count_exprs_round_trips_per_check(spark, py4j_commands):
     """Building the violation-count aggregate of the lineitem schema costs
     at most 5 py4j commands per check (a Column tree built node by node
     cost ~85: every Column-API node pays for origin capture)."""
-    import py4j.clientserver as cs
-
     checks = _lineitem_checks()
     assert len(checks) == 37
 
-    sent = []
-    real = cs.ClientServerConnection.send_command
-
-    def counting(self, command):
-        sent.append(command)
-        return real(self, command)
-
-    cs.ClientServerConnection.send_command = counting
-    try:
+    with py4j_commands() as sent:
         exprs = violation_count_exprs(checks)
-    finally:
-        cs.ClientServerConnection.send_command = real
     assert len(exprs) == 37
     assert len(sent) <= 5 * len(checks), len(sent)

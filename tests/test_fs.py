@@ -18,8 +18,9 @@ def test_roundtrip_with_explicit_file_scheme(spark, tmp_path):
     fs.touch(f"{root}/partition=a/_SUCCESS")
 
     assert fs.exists(f"{root}/partition=a/_SUCCESS")
-    assert fs.is_dir(f"{root}/partition=a")
-    assert not fs.is_dir(f"{root}/partition=a/_SUCCESS")
+    assert fs.list_dirs(root) == ["partition=a"]
+    assert fs.list_dirs(f"{root}/partition=a") == []  # _SUCCESS is a file
+    assert fs.list_dirs(f"{root}/does-not-exist") == []
     assert fs.read_bytes(f"{root}/partition=a/data.bin") == b"\x00payload\xff"
     assert sorted(fs.listdir(root)) == ["partition=a"]
     assert fs.listdir(f"{root}/does-not-exist") == []
@@ -28,7 +29,7 @@ def test_roundtrip_with_explicit_file_scheme(spark, tmp_path):
     # files but keeps the directory
     fs.clear_files(f"{root}/partition=a")
     assert fs.listdir(f"{root}/partition=a") == []
-    assert fs.is_dir(f"{root}/partition=a")
+    assert fs.list_dirs(root) == ["partition=a"]
 
 
 def test_parquet_bytes_spark_readable(spark, tmp_path):

@@ -392,3 +392,82 @@ def test_validation_batch_runs_only_validate_tables_jobs(spark, tmp_path):
     assert sorted(per_part) == sorted(str(p) for p in parts)
     assert sum(m["rows"] for m in per_part.values()) == res.total_rows == 300
     assert res.verdict_rows == res.verdicts.collect()
+
+
+def test_audit_commit_round_trips(spark, tmp_path, py4j_commands):
+    """A commit is three metadata calls on the log's one DriverFS (clear
+    stale files, write the parquet, touch _SUCCESS — the write makes the
+    partition directory): at most 25 py4j commands. With a Hadoop
+    ``Path`` class looked up by reflection on every call and an
+    explicit mkdirs it sent 43."""
+    audit = AuditLog(spark, str(tmp_path / "audit"))
+    audit.commit("warm", [{"rows": 1}])
+    with py4j_commands() as sent:
+        audit.commit("p0", [{"rows": 3, "violations": 1, "checks": {"c": 1}}])
+    assert len(sent) <= 25, len(sent)
+    assert audit.completed_partitions() == {"warm", "p0"}
+    assert {r["partition"]: r["rows"] for r in audit.read().collect()} == {"warm": 1, "p0": 3}
+
+
+def test_partition_written_between_passes_is_audited(spark, tmp_path):
+    """One table instance, two passes: a partition added by a plain
+    ``df.write`` after the first pass is audited on the second with its
+    true row count — the second pass reads the snapshot taken at its
+    own listing, not the first pass's scan (which would hand back 0
+    rows for the new directory)."""
+    from pandera_forge_spark.runner import validation_process_batch
+    from pandera_forge_spark.schema import TableSchema
+
+    df = spark.createDataFrame([(p, i) for p in ("a", "b") for i in range(4)], "k string, x long")
+    root = str(tmp_path / "t")
+    table = HivePartitionedParquet(spark, root, "k")
+    table.write(df)
+    audit = AuditLog(spark, str(tmp_path / "audit"))
+    pb = validation_process_batch(TableSchema("T"), "k")
+
+    r1 = run_partitions(table, audit, process_batch=pb, batch_size=8)
+    assert sorted(r1.processed) == ["a", "b"]
+
+    spark.createDataFrame([("c", i) for i in range(3)], "k string, x long").write.partitionBy(
+        "k"
+    ).mode("append").parquet(root)
+    r2 = run_partitions(table, audit, process_batch=pb, batch_size=8)
+    assert r2.processed == ["c"] and sorted(r2.skipped) == ["a", "b"]
+    got = {r["partition"]: r["rows"] for r in audit.read().collect()}
+    assert got == {"a": 4, "b": 4, "c": 3}
+
+
+def test_table_write_append_shows_in_next_read(spark, tmp_path):
+    """Rows appended through ``table.write(..., mode="append")`` are in
+    the next read of the same instance, listing or not."""
+    table = HivePartitionedParquet(spark, str(tmp_path / "t"), "k")
+    table.write(spark.createDataFrame([("a", i) for i in range(5)], "k string, x long"))
+    assert table.list_partitions() == ["a"]
+    assert table.read_partitions(["a"]).count() == 5
+    table.write(
+        spark.createDataFrame([("a", 9), ("b", 1)], "k string, x long"), mode="append"
+    )
+    assert table.read_partitions(["a", "b"]).count() == 7
+    assert table.read_partition("b").count() == 1
+
+
+def test_manifest_fence_at_its_edge(spark, tmp_path, monkeypatch):
+    """MAX_MANIFEST counts partition directories only: N pass, N+1 raise
+    naming the count; plain files at the root — _SUCCESS, its .crc, even
+    a file named like a partition — are neither listed nor counted."""
+    import os
+
+    import pytest
+
+    monkeypatch.setattr(HivePartitionedParquet, "MAX_MANIFEST", 3)
+    root = tmp_path / "t"
+    for v in ("1", "2", "3"):
+        os.makedirs(root / f"col={v}")
+    for name in ("_SUCCESS", "._SUCCESS.crc", "col=x"):
+        (root / name).write_bytes(b"")
+    table = HivePartitionedParquet(spark, str(root), "col")
+    assert table.list_partitions() == ["1", "2", "3"]
+
+    os.makedirs(root / "col=4")
+    with pytest.raises(ValueError, match="4 partition directories"):
+        table.list_partitions()
