@@ -10853,7 +10853,7 @@ WITH meds AS (
 ),
 z AS (
   SELECT e.event_type, ABS(e.value - m.med) AS z
-  FROM events e JOIN meds m USING (event_type)
+  FROM events e JOIN meds m ON e.event_type IS NOT DISTINCT FROM m.event_type
   WHERE e.value IS NOT NULL
 ),
 per_g AS (

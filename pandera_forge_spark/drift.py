@@ -938,7 +938,10 @@ def brown_forsythe(
     fused moment aggregation over z. The F statistic is a fixed-order
     expression over those sums (callers round at 6 — cross-row float
     sums). Degenerate inputs (k < 2, N <= k, zero within-group
-    variation) report NULL F loudly.
+    variation) report NULL F loudly. A NULL ``group_col`` value is one
+    group like any other (the median join is NULL-safe), so its rows
+    count in ``k_groups`` and ``n_rows``; rows with a NULL value are
+    left out.
 
     Output (single row): ``k_groups, n_rows, ss_between, ss_within,
     f_stat``.
@@ -951,7 +954,7 @@ def brown_forsythe(
         F.expr(f"percentile({value_col}, 0.5)").alias("__med")
     )
     z = base.join(
-        F.broadcast(meds), F.col(group_col) == F.col("__g")
+        F.broadcast(meds), F.col(group_col).eqNullSafe(F.col("__g"))
     ).select(
         F.col("__g"),
         F.abs(F.col(value_col).cast("double") - F.col("__med")).alias("__z"),

@@ -10,17 +10,24 @@ This engine fuses EVERYTHING into:
 
   JOB 1: one ``df.agg(...)`` computing, for every column at once:
          count, null-count, distinct (exact or HLL), numeric
-         min/max/mean/stddev, string length bounds, prefix/suffix
-         probes, and all 17 named-pattern match ratios.
-         All of these are DeclarativeAggregates → partial (map-side)
-         aggregation + one final reduce; a single scan regardless of
-         column count, fully inside whole-stage codegen.
+         min/max/mean/stddev, string length bounds and prefix/suffix
+         probes. All of these are DeclarativeAggregates → partial
+         (map-side) aggregation + one final reduce; a single scan
+         regardless of column count, fully inside whole-stage codegen.
 
   JOB 2: one melted ``groupBy(col, val)`` pass producing top-k frequent
-         values for all columns together (one shuffle total, vs one
-         groupBy job per column in the reference).
+         values and exact distinct counts for all columns together (one
+         shuffle total, vs one groupBy job per column in the
+         reference). It also carries the 17 named-pattern match counts
+         of the melted string columns: each regex runs once per
+         distinct value, weighted by its count, instead of once per
+         row.
 
-Per-partition profiles (north rule) reuse JOB 1 with ``groupBy(keys)``.
+A string column the melt does not carry (a high-cardinality one in
+``"auto"`` mode) gets the per-row 17-regex sweep as one column-pruned
+aggregate after JOB 1; when no melt runs at all, that sweep rides JOB 1.
+Per-partition profiles (north rule) reuse JOB 1 with ``groupBy(keys)``,
+and ``fused_stats_frame`` is JOB 1 with the per-row sweep.
 """
 
 from __future__ import annotations
@@ -138,14 +145,33 @@ def pattern_stat_exprs(df: DataFrame, columns: Sequence[str]) -> list:
 PATTERN_SAMPLE_SEED = 42
 
 
+def pattern_sweep_frame(
+    df: DataFrame,
+    columns: Sequence[str],
+    total: int,
+    pattern_sample: Optional[int] = None,
+) -> DataFrame:
+    """The per-row 17-regex sweep over the string columns of
+    ``columns`` as one single-row aggregate (``pattern_stat_exprs``).
+    The scan reads only those columns. With ``pattern_sample`` set and
+    ``total`` rows above it, the sweep runs over a seeded Bernoulli
+    sample of ~``pattern_sample`` rows instead."""
+    s = df
+    if pattern_sample is not None and total > pattern_sample:
+        s = df.sample(False, pattern_sample / total, seed=PATTERN_SAMPLE_SEED)
+    return s.agg(*pattern_stat_exprs(df, columns))
+
+
 def fused_stats_frame(
     df: DataFrame,
     columns: Optional[Sequence[str]] = None,
     detect_patterns: bool = True,
     pattern_sample: Optional[int] = None,
 ) -> DataFrame:
-    """The single-row JOB-1 stats frame behind ``profile_table``, as an
-    uncollected DataFrame (benchmarks, remote collection).
+    """The single-row stats frame of ``stat_exprs`` over every column,
+    as an uncollected DataFrame (benchmarks, remote collection). It
+    carries the per-row pattern sweep itself; ``profile_table`` moves
+    that sweep onto the melt instead.
 
     With ``pattern_sample`` set, the 17-regex sweep — the single most
     expensive part of full-table profiling (rows x string-columns x 17
@@ -158,14 +184,11 @@ def fused_stats_frame(
     columns = list(columns or df.columns)
     if detect_patterns and pattern_sample:
         base = df.agg(*stat_exprs(df, columns, False, False))
-        pexprs = pattern_stat_exprs(df, columns)
-        if not pexprs:
+        dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
+        if not any(_is_string(dtypes[c]) for c in columns):
             return base
-        total = df.count()  # count-star: parquet metadata, no row scan
-        s = df
-        if total > pattern_sample:
-            s = df.sample(False, pattern_sample / total, seed=PATTERN_SAMPLE_SEED)
-        return base.crossJoin(s.agg(*pexprs))
+        # count-star: parquet metadata, no row scan
+        return base.crossJoin(pattern_sweep_frame(df, columns, df.count(), pattern_sample))
     return df.agg(*stat_exprs(df, columns, False, detect_patterns))
 
 
@@ -202,7 +225,7 @@ def top_values(
     under distribution, so we define this total order; SURVEY.md §7
     "hard parts" #4).
     """
-    tops, _ = top_values_and_distinct(df, columns, k)
+    tops, _, _ = top_values_and_distinct(df, columns, k)
     return tops
 
 
@@ -213,9 +236,17 @@ def top_values_and_distinct(
     df: DataFrame,
     columns: Sequence[str],
     k: int = ISIN_MAX_DISTINCT,
-) -> tuple[dict[str, list[tuple[str, int]]], dict[str, int]]:
-    """Shared melted pass producing BOTH top-k frequent values and the
-    EXACT distinct count per column, in one action.
+    pattern_cols: Sequence[str] = (),
+) -> tuple[dict[str, list[tuple[str, int]]], dict[str, int], dict[str, Optional[float]]]:
+    """Shared melted pass producing top-k frequent values, the EXACT
+    distinct count per column and the named-pattern ratios of the
+    string columns in ``pattern_cols``, in one action.
+
+    The ratios come keyed ``{col}__pat__{name}`` like the per-row sweep's
+    aggregates, each ``Σ count·[val RLIKE rx] / Σ count`` over the
+    column's distinct values: a sum of 0/1 matches is exact, so the
+    quotient is the same double as the per-row ``avg``. A column with
+    no non-null value gets NULL ratios, as ``avg`` gives.
 
     Scale design (a high-cardinality column like ``doc_id`` has ~all
     table rows as distinct values, so nothing may ever partition by
@@ -248,25 +279,41 @@ def top_values_and_distinct(
     """
     dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
     cols = [c for c in columns if _is_simple(dtypes[c])]
+    pattern_cols = [c for c in pattern_cols if c in cols and _is_string(dtypes[c])]
+    ratios: dict[str, Optional[float]] = {
+        f"{c}__pat__{name}": None for c in pattern_cols for name in NAMED_PATTERNS
+    }
     if not cols:
-        return {}, {}
-    final = topk_frame(df, cols, k)
+        return {}, {}, ratios
+    final = topk_frame(df, cols, k, pattern_cols)
     out: dict[str, list[tuple[str, int]]] = {c: [] for c in cols}
     distinct: dict[str, int] = {c: 0 for c in cols}
     for row in final.collect():
-        distinct[row["col"]] = row["n_distinct"]
-        out[row["col"]] = [(e["val"], -e["negcnt"]) for e in row["topk"]]
-    return out, distinct
+        c = row["col"]
+        distinct[c] = row["n_distinct"]
+        out[c] = [(e["val"], -e["negcnt"]) for e in row["topk"]]
+        if c in pattern_cols:
+            nonnull = float(row["nonnull"])
+            for name in NAMED_PATTERNS:
+                ratios[f"{c}__pat__{name}"] = float(row[f"__pat__{name}"]) / nonnull
+    return out, distinct, ratios
 
 
 def topk_frame(
-    df: DataFrame, cols: Sequence[str], k: int = ISIN_MAX_DISTINCT
+    df: DataFrame,
+    cols: Sequence[str],
+    k: int = ISIN_MAX_DISTINCT,
+    pattern_cols: Sequence[str] = (),
 ) -> DataFrame:
     """The uncollected aggregation tree behind
     ``top_values_and_distinct``: one row per column with
-    ``(col, n_distinct, topk: array<struct<negcnt,val>>)``. Exposed so
-    the engine path itself can be oracle-anchored and benchmarked as a
-    DataFrame, not just via its collected dict form."""
+    ``(col, n_distinct, topk: array<struct<negcnt,val>>, nonnull)``
+    and, when ``pattern_cols`` is given, one ``__pat__{name}`` match
+    count per named pattern (NULL for columns not in ``pattern_cols``).
+    The regexes run in the salted partial aggregate, so once per
+    distinct ``(col, val)``, never per row. Exposed so the engine path
+    itself can be oracle-anchored and benchmarked as a DataFrame, not
+    just via its collected dict form."""
     pairs = df.select(
         F.expr(
             "explode(array("
@@ -278,6 +325,14 @@ def topk_frame(
         )
     ).select("p.col", "p.val")
     counts = pairs.where("val IS NOT NULL").groupBy("col", "val").count()
+    pats: dict[str, str] = {}
+    if pattern_cols:
+        is_str = f"col IN ({', '.join(sql_literal(c) for c in pattern_cols)})"
+        pats = {
+            f"__pat__{name}": f"CASE WHEN {is_str} THEN "
+            f"IF(val RLIKE {sql_literal('(?i)' + rx)}, `count`, 0) END"
+            for name, rx in NAMED_PATTERNS.items()
+        }
 
     # struct sorts field-wise ascending, so (-count, val) == count
     # desc, val asc
@@ -289,10 +344,14 @@ def topk_frame(
             "slice(array_sort(collect_list(struct(-`count` AS negcnt, val AS val))), "
             f"1, {int(k)}) AS cand"
         ),
+        F.expr("sum(`count`) AS nonnull"),
+        *[F.expr(f"sum({e}) AS {a}") for a, e in pats.items()],
     )
     return partial.groupBy("col").agg(
         F.expr("sum(nd) AS n_distinct"),
         F.expr(f"slice(array_sort(flatten(collect_list(cand))), 1, {int(k)}) AS topk"),
+        F.expr("sum(nonnull) AS nonnull"),
+        *[F.expr(f"sum({a}) AS {a}") for a in pats],
     )
 
 
@@ -339,56 +398,69 @@ def profile_table(
     JOB 1 itself ALWAYS uses HLL: fusing 20+ ``countDistinct``s into
     one agg makes Catalyst plan an Expand that multiplies every input
     row by the number of distinct aggregates before partial
-    aggregation, re-evaluating the 17 pattern regexes on each copy.
+    aggregation.
 
-    ``pattern_sample``: when set, the 17-regex sweep moves to a seeded
+    Pattern ratios (``detect_patterns``) are taken where they are
+    cheapest. A string column that goes through the melt gets its 17
+    ratios from the melt's ``(col, val, count)`` rows, each regex run
+    once per distinct value (``topk_frame``); the quotient is the same
+    double the per-row ``avg`` gives. Only string columns the melt does
+    not carry get the per-row sweep: in ``"auto"`` mode those whose HLL
+    estimate is above AUTO_SMALL_DOMAIN, as one more aggregate after
+    JOB 1 whose scan reads only them (``pattern_sweep_frame``); with
+    ``exact_distinct=False, with_examples=False`` no melt runs, and the
+    sweep rides JOB 1 for every string column.
+
+    ``pattern_sample``: when set, the per-row sweep runs over a seeded
     Bernoulli sample of ~that many rows (a second, tiny aggregation
-    job) instead of riding the full scan — the 100 TB detection path,
+    job) instead of the full data — the 100 TB detection path,
     mirroring the reference's own 10k-row pattern sample
     (reference: spark/spark_generator.py:124-139). Exact stats always
-    stay full-data; only the >=0.9-threshold DETECTION is sampled.
-    Default None keeps full-scan detection (oracle-exact parity).
+    stay full-data; only the >=0.9-threshold DETECTION is sampled, and
+    only for string columns the melt does not carry: melted columns
+    get exact full-data ratios at no extra cost. Default None keeps
+    full-data detection (oracle-exact parity).
     """
     columns = list(columns or df.columns)
     dtypes = dict((f.name, f.dataType) for f in df.schema.fields)
+    simple = [c for c in columns if _is_simple(dtypes[c])]
+    strings = [c for c in columns if _is_string(dtypes[c])] if detect_patterns else []
+    auto = exact_distinct == "auto"
+    melts = auto or bool(exact_distinct) or with_examples
 
-    full_patterns = detect_patterns and pattern_sample is None
-    row = df.agg(*stat_exprs(df, columns, False, full_patterns)).collect()[0]
+    # without a melt the per-row sweep rides JOB 1's scan
+    sweep_in_job1 = bool(strings) and not melts and pattern_sample is None
+    row = df.agg(*stat_exprs(df, columns, False, sweep_in_job1)).collect()[0]
     stats = row.asDict()
     total = stats["__total__"]
-    if detect_patterns and pattern_sample is not None:
-        pexprs = pattern_stat_exprs(df, columns)
-        if pexprs:
-            s = df
-            if total > pattern_sample:
-                s = df.sample(
-                    False, pattern_sample / total, seed=PATTERN_SAMPLE_SEED
-                )
-            stats.update(s.agg(*pexprs).collect()[0].asDict())
 
-    auto = exact_distinct == "auto"
+    if auto:
+        melted = [c for c in simple if (stats.get(f"{c}__distinct") or 0) <= AUTO_SMALL_DOMAIN]
+    else:
+        melted = simple if melts else []
+    swept = [] if sweep_in_job1 else [c for c in strings if c not in melted]
+    if swept:
+        stats.update(pattern_sweep_frame(df, swept, total, pattern_sample).collect()[0].asDict())
+
     tops: dict = {}
     exact_counts: dict = {}
     verified: dict[str, bool] = {}
-    if auto:
-        small = [
-            c
-            for c in columns
-            if _is_simple(dtypes[c])
-            and (stats.get(f"{c}__distinct") or 0) <= AUTO_SMALL_DOMAIN
-        ]
-        if small:
-            # the melt runs regardless of with_examples: auto mode
-            # promises EXACT distinct counts for small domains (the
-            # isin rule depends on them); the tops are simply dropped
-            # from the output when examples weren't asked for
-            tops, exact_counts = top_values_and_distinct(df, small)
-            for c, n in exact_counts.items():
+    if melted:
+        # in auto mode the melt runs regardless of with_examples: it
+        # promises EXACT distinct counts for small domains (the isin
+        # rule depends on them); the tops are simply dropped from the
+        # output when examples weren't asked for
+        tops, counts, ratios = top_values_and_distinct(df, melted, pattern_cols=strings)
+        stats.update(ratios)
+        if auto or exact_distinct:
+            exact_counts = counts
+            for c, n in counts.items():
                 stats[f"{c}__distinct"] = n
+    if auto:
         from pandera_forge_spark.validator import has_duplicate_keys
 
-        for c in columns:
-            if not _is_simple(dtypes[c]) or c in exact_counts:
+        for c in simple:
+            if c in exact_counts:
                 continue
             hll = stats.get(f"{c}__distinct")
             nulls = stats.get(f"{c}__nulls") or 0
@@ -399,12 +471,6 @@ def profile_table(
                 and hll >= AUTO_UNIQUE_CANDIDATE * total
             ):
                 verified[c] = not has_duplicate_keys(df, [c])
-    elif exact_distinct:
-        tops, exact_counts = top_values_and_distinct(df, columns)
-        for c, n in exact_counts.items():
-            stats[f"{c}__distinct"] = n
-    elif with_examples:
-        tops, _ = top_values_and_distinct(df, columns)
 
     profiles: dict[str, ColumnProfile] = {}
     for c in columns:
@@ -2845,7 +2911,7 @@ def jackknife_ratio(
     loo = sums.crossJoin(F.broadcast(tot)).withColumn(
         "__r",
         F.when(
-            (F.col("__td") - F.col("__sd")) != 0,
+            (F.col("__sd") != 0) & ((F.col("__td") - F.col("__sd")) != 0),
             (F.col("__tn") - F.col("__sn"))
             / (F.col("__td") - F.col("__sd")),
         ),

@@ -734,6 +734,23 @@ def test_brown_forsythe_matches_scipy_style_reference(spark):
     assert abs(r2.f_stat) < 1e-9
 
 
+def test_brown_forsythe_null_group_is_a_group(spark):
+    """Rows whose group key is NULL form one group of their own: they
+    count in k_groups and n_rows, and F equals the same data with the
+    NULL key spelled as a real value."""
+    from pandera_forge_spark.drift import brown_forsythe
+
+    groups = {"a": [1.0, 2.0, 3.0, 4.0], None: [0.0, 5.0, 10.0, 20.0, 40.0]}
+    rows = [(g, v) for g, vs in groups.items() for v in vs] + [(None, None), ("a", None)]
+    df = spark.createDataFrame(rows, "grp string, v double")
+    r = brown_forsythe(df, "v", "grp").collect()[0]
+    named = df.fillna({"grp": "__null__"})
+    want = brown_forsythe(named, "v", "grp").collect()[0]
+    assert r.k_groups == 2 and r.n_rows == 9
+    assert r.f_stat is not None
+    assert repr(tuple(r)) == repr(tuple(want))
+
+
 def test_brown_forsythe_degenerate_and_fences(spark):
     import pytest
 

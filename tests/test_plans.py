@@ -20,7 +20,7 @@ from pandera_forge_spark.plans import (
     pushed_filters,
     scan_read_schema,
 )
-from pandera_forge_spark.profiler import profile_by_group, stat_exprs
+from pandera_forge_spark.profiler import profile_by_group, profile_table, stat_exprs
 from pandera_forge_spark.schema import ColumnSpec, TableSchema
 from pandera_forge_spark.validator import orphan_rows, violation_rows
 
@@ -47,6 +47,59 @@ def test_stat_exprs_round_trips_per_aggregate(lineitem, py4j_commands):
         exprs = stat_exprs(lineitem, lineitem.columns, False, True)
     assert len(exprs) > 100
     assert len(sent) <= 5 * len(exprs), (len(sent), len(exprs))
+
+
+def _collected_plans(spark, monkeypatch, df):
+    """The executed plan of every DataFrame ``profile_table(df)``
+    collects, in order, lower-cased and with no expression list cut
+    short (plan text keeps 25 fields by default)."""
+    cls = type(df)
+    frames = []
+    real = cls.collect
+    monkeypatch.setattr(cls, "collect", lambda self: frames.append(self) or real(self))
+    profile_table(df)
+    monkeypatch.undo()
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
+    try:
+        return [(executed_plan(f).lower(), f) for f in frames]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_profile_job1_has_no_regex_when_strings_are_small(spark, lineitem, monkeypatch):
+    """lineitem's two string columns are small-domain: JOB 1 runs no
+    RLIKE, the melt carries all 17 pattern counts, and no per-row sweep
+    runs."""
+    plans = [p for p, _ in _collected_plans(spark, monkeypatch, lineitem)]
+    assert "l_linestatus" in plans[0] and "rlike" not in plans[0]
+    regex = [p for p in plans[1:] if "rlike" in p]
+    assert len(regex) == 1 and "generate" in regex[0]
+
+
+def test_profile_pattern_sweep_reads_only_high_cardinality_strings(spark, tmp_path, monkeypatch):
+    """In auto mode the per-row sweep is its own aggregate after JOB 1,
+    and its scan reads only the string columns whose HLL estimate is
+    above AUTO_SMALL_DOMAIN."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(3000).selectExpr(
+        "id",
+        "id * 0.5 AS x",
+        "concat('k', id % 7) AS small",
+        "concat('u', id, '@x.io') AS hi1",
+        "sha1(CAST(id AS STRING)) AS hi2",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    plans = _collected_plans(spark, monkeypatch, df)
+    assert "hi2" in plans[0][0] and "rlike" not in plans[0][0]
+    sweeps = [f for p, f in plans if "rlike" in p and "generate" not in p]
+    assert len(sweeps) == 1
+    schemas = scan_read_schema(sweeps[0])
+    assert set(schemas) == {"struct<hi1:string,hi2:string>"}, schemas
 
 
 def test_per_group_profile_has_no_expand(spark, lineitem):

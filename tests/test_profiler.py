@@ -3,6 +3,7 @@ ever tests Spark with mocks — SURVEY.md §5)."""
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from pandera_forge_spark.profiler import profile_by_group, profile_table
@@ -194,6 +195,95 @@ def test_fused_stats_frame_sampled(spark):
     row = fused_stats_frame(df, pattern_sample=200).collect()[0]
     assert row["__total__"] == 2000
     assert row["s__pat__email"] >= 0.9
+
+
+def _pattern_frame(spark):
+    """String columns for every pattern-ratio path: NULLs, empty
+    strings, mixed case (the patterns run with ``(?i)``: upper-case
+    UUIDs and slugs only match that way), an all-NULL column, and two
+    columns at the auto-mode melt fence: ``d1000`` has exactly
+    AUTO_SMALL_DOMAIN distinct values and an HLL estimate (997) at or
+    below it, ``d1001`` one value more and an estimate (1081) above
+    it."""
+    mixed = ["Ab-Cd", "ef-GH", "", None, "x-1", "A@B.co", "Ab-Cd"]
+    uuids = [f"{i:08X}-ABCD-4EF0-9A1B-{i * 7919:012X}" for i in range(20)]
+    rows = [
+        (
+            i,
+            mixed[i % len(mixed)],
+            uuids[i % 20] if i % 9 else None,
+            None,
+            f"Row-{i % 1000}",
+            f"K-{i % 1001}",
+            f"User{i}@Example.COM" if i % 50 else "",
+        )
+        for i in range(2400)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "n long, mixed string, uuid string, allnull string, d1000 string, "
+        "d1001 string, uniq string",
+    )
+
+
+PATTERN_MODES = {
+    "auto": dict(exact_distinct="auto"),
+    "exact": dict(exact_distinct=True),
+    "hll-examples": dict(exact_distinct=False),
+    "hll-no-examples": dict(exact_distinct=False, with_examples=False),
+    "auto-sampled": dict(exact_distinct="auto", pattern_sample=600),
+    "exact-sampled": dict(exact_distinct=True, pattern_sample=600),
+    "hll-no-examples-sampled": dict(exact_distinct=False, with_examples=False, pattern_sample=600),
+}
+
+
+@pytest.mark.parametrize("mode", list(PATTERN_MODES))
+def test_pattern_ratios_match_per_row_sweep(spark, monkeypatch, mode):
+    """Every mode's pattern ratios, and the pattern picked from them,
+    are bit for bit (by ``repr``) the per-row ``pattern_stat_exprs``
+    ratios: full data for melted columns, the seeded sample for the
+    others when ``pattern_sample`` is set."""
+    import pandera_forge_spark.profiler as profiler
+    from pandera_forge_spark.patterns import NAMED_PATTERNS, pick_pattern
+
+    kw = PATTERN_MODES[mode]
+    df = _pattern_frame(spark)
+    strings = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
+    seen = []
+    real = profiler.pick_pattern
+    monkeypatch.setattr(profiler, "pick_pattern", lambda r: seen.append(r) or real(r))
+    got = profiler.profile_table(df, **kw)
+    monkeypatch.undo()
+
+    if kw["exact_distinct"] == "auto":
+        melted = {c for c in strings if got[c].distinct_is_exact}
+        assert "d1000" in melted and "d1001" not in melted and "uniq" not in melted
+        assert got["d1000"].distinct_count == profiler.AUTO_SMALL_DOMAIN
+    elif kw["exact_distinct"] or kw.get("with_examples", True):
+        melted = set(strings)
+    else:
+        melted = set()
+    per_row = df.agg(*profiler.pattern_stat_exprs(df, strings)).collect()[0].asDict()
+    sampled = per_row
+    if "pattern_sample" in kw:
+        frac = kw["pattern_sample"] / df.count()
+        s = df.sample(False, frac, seed=profiler.PATTERN_SAMPLE_SEED)
+        sampled = s.agg(*profiler.pattern_stat_exprs(df, strings)).collect()[0].asDict()
+
+    checked = [c for c in strings if got[c].null_count < got[c].total_count]
+    assert "allnull" not in checked and len(seen) == len(checked)
+    assert got["allnull"].pattern_name is None
+    for c, ratios in zip(checked, seen):
+        ref = per_row if c in melted else sampled
+        want = {name: ref[f"{c}__pat__{name}"] for name in NAMED_PATTERNS}
+        assert repr(ratios) == repr(want), c
+        hit = pick_pattern(want) or (None, None)
+        assert (got[c].pattern_name, got[c].pattern) == hit, c
+    picked = {c: got[c].pattern_name for c in checked}
+    if "pattern_sample" not in kw:
+        assert picked == {
+            "mixed": None, "uuid": "uuid", "d1000": "slug", "d1001": "slug", "uniq": "email"
+        }
 
 
 def test_histogram_buckets(spark):
@@ -1200,7 +1290,10 @@ def test_jackknife_ratio_matches_python_reference(spark):
     rows.append(("dz", 0.0, 0.0))
     df2 = spark.createDataFrame(rows, "f string, num double, den double")
     r2 = jackknife_ratio(df2, F.col("num"), F.col("den"), F.col("f")).collect()[0]
-    assert r2.n_zero_folds == 1 and abs(r2.ratio - tn / td) < 1e-12
+    assert r2.n_folds == 5 and r2.n_zero_folds == 1 and abs(r2.ratio - tn / td) < 1e-12
+    # ... so the SE is the 4-fold one, not a 5-fold spread that counts
+    # the zero fold's leave-out ratio (tn / td) as a fifth estimate
+    assert abs(r2.se - math.sqrt(var)) < 1e-9
 
 
 def test_jackknife_ratio_degenerate(spark):

@@ -64,7 +64,8 @@ def _stat_exprs_ref(df, columns, exact_distinct, detect_patterns):
     return exprs
 
 
-def _topk_frame_ref(df, cols, k=profiler.ISIN_MAX_DISTINCT):
+def _topk_frame_ref(df, cols, k=profiler.ISIN_MAX_DISTINCT, pattern_cols=()):
+    assert not pattern_cols  # the reference melt carries no pattern counts
     pairs = df.select(
         F.explode(
             F.array(
@@ -195,10 +196,20 @@ def _rows(df):
 
 @pytest.mark.parametrize("exact", ["auto", True])
 def test_profile_table_bit_identical(frame, monkeypatch, exact):
+    """The reference profiles without patterns through the old trees,
+    then detects patterns per row: the old fused aggregate's ratios and
+    ``pick_pattern``, for every string column with a non-null value."""
     got = profiler.profile_table(frame, exact_distinct=exact)
     monkeypatch.setattr(profiler, "stat_exprs", _stat_exprs_ref)
     monkeypatch.setattr(profiler, "topk_frame", _topk_frame_ref)
-    want = profiler.profile_table(frame, exact_distinct=exact)
+    want = profiler.profile_table(frame, exact_distinct=exact, detect_patterns=False)
+    stats = frame.agg(*_stat_exprs_ref(frame, frame.columns, False, True)).collect()[0]
+    for c, p in want.items():
+        if p.spark_type == "string" and p.null_count < p.total_count:
+            hit = profiler.pick_pattern({n: stats[f"{c}__pat__{n}"] for n in NAMED_PATTERNS})
+            if hit:
+                p.pattern_name, p.pattern = hit
+    assert any(p.pattern_name for p in want.values())
     assert list(got) == list(want)
     for c in want:
         _same(dataclasses.asdict(got[c]), dataclasses.asdict(want[c]))
