@@ -1,8 +1,9 @@
 """Inspect a DataFrame's executed (physical) plan as text.
 
 All predicates work on the final SparkPlan string (the same text
-``df.explain()`` prints), so they see exactly what will run — after
-Catalyst optimization and AQE planning, not the logical intent.
+``df.explain()`` prints, but with no expression list cut short), so
+they see exactly what will run — after Catalyst optimization and AQE
+planning, not the logical intent.
 """
 
 from __future__ import annotations
@@ -12,13 +13,35 @@ import re
 from pyspark.sql import DataFrame
 
 
+_MAX_FIELDS = "spark.sql.debug.maxToStringFields"
+
+
+def _full_text(df: DataFrame, plan) -> str:
+    """``plan.toString()`` with no expression list cut short: plan text
+    keeps ``spark.sql.debug.maxToStringFields`` (default 25) fields per
+    list and drops the rest as "... N more fields", so a predicate
+    looking for an expression in a wide aggregate would miss it. The
+    limit is raised for the call and restored (or unset) afterwards."""
+    conf = df.sparkSession.conf
+    old = conf.get(_MAX_FIELDS, None)
+    conf.set(_MAX_FIELDS, "1000000")
+    try:
+        return plan.toString()
+    finally:
+        if old is None:
+            conf.unset(_MAX_FIELDS)
+        else:
+            conf.set(_MAX_FIELDS, old)
+
+
 def executed_plan(df: DataFrame) -> str:
-    """Physical plan text (post-optimizer, pre-execution)."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    """Physical plan text (post-optimizer, pre-execution), uncut."""
+    return _full_text(df, df._jdf.queryExecution().executedPlan())
 
 
 def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+    """Optimized logical plan text, uncut."""
+    return _full_text(df, df._jdf.queryExecution().optimizedPlan())
 
 
 def has_expand(df: DataFrame) -> bool:

@@ -26,10 +26,15 @@ listing plus parquet schema inference) once after each listing and
 every batch of the pass filters that one scan; the next pass lists
 again and so sees partitions written in between.
 
-Driver cost: the table and the audit log each hold one ``DriverFS``
-(the Hadoop ``Path`` class and configuration resolved once), the
-manifest is one ``listStatus``, and a commit is three metadata calls —
-clear stale files, write the rows, touch ``_SUCCESS``.
+Driver cost: the table and the audit log each hold one ``DriverFS``,
+the manifest is one directory listing, and a commit is three metadata
+calls — clear stale files, write the rows, touch ``_SUCCESS``. On a
+local root ``DriverFS`` serves them through the OS: no py4j round trip
+and no process start-up (Hadoop's local filesystem starts a ``chmod``
+process per created file and directory without its native library, so
+a commit through it cost ~20 ms; through the OS ~0.5 ms). Other roots
+(``s3a://``, ``hdfs://``) go through Hadoop's FileSystem, where the
+Hadoop ``Path`` class and configuration are resolved once per instance.
 """
 
 from __future__ import annotations
@@ -74,9 +79,10 @@ class HivePartitionedParquet:
     def list_partitions(self) -> list[str]:
         """The partition manifest. Directory listing — O(partitions),
         no data scan (Iceberg equivalent: the `partitions` metadata
-        table): one ``listStatus`` call, directory flags included.
+        table): one directory listing, directory flags included.
         Scheme-aware: works on s3a://, hdfs://, local paths alike
-        (DriverFS routes through Hadoop's FileSystem). Drops the base
+        (DriverFS routes each path to the OS or to Hadoop's
+        FileSystem). Drops the base
         scan, so the next read sees the table as of this listing.
 
         Loudly fenced at ``MAX_MANIFEST`` partition directories (plain
@@ -213,11 +219,12 @@ class AuditLog:
         partitions a per-commit Spark job would add scheduling latency
         comparable to the work itself. The write is overwrite-idempotent
         (stale files cleared first, _SUCCESS last), preserving the
-        commit protocol resume depends on, and goes through the
-        Hadoop FileSystem (DriverFS) so ``--audit s3a://...`` works the
-        same as a local path; the file write creates the partition
-        directory. The Iceberg binding replaces this with
-        ``writeTo(audit).overwritePartitions()``."""
+        commit protocol resume depends on, and goes through DriverFS:
+        the OS for a local root (no py4j round trip, no ``.crc``
+        sidecars), Hadoop's FileSystem otherwise, so ``--audit
+        s3a://...`` works the same as a local path; the file write
+        creates the partition directory. The Iceberg binding replaces
+        this with ``writeTo(audit).overwritePartitions()``."""
         import pyarrow as pa
 
         from pandera_forge_spark.sources.fs import write_parquet_bytes

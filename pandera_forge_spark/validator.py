@@ -18,6 +18,7 @@ the reference disables at scale) with:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -42,16 +43,31 @@ class ValidationResult:
     In grouped mode (``partition_cols`` given) ``verdict_rows`` holds the
     per-partition rows the validation job collected — partition columns,
     one violation count per row-level check, ``__rows__`` — and
-    ``verdicts`` is the same rows as a local DataFrame. Read
-    ``verdict_rows`` when the rows are needed on the driver: collecting
-    ``verdicts`` runs one more Spark job for rows already in hand."""
+    ``verdicts`` is the same rows as a local DataFrame, built on first
+    access. Read ``verdict_rows`` when the rows are needed on the
+    driver: collecting ``verdicts`` runs one more Spark job for rows
+    already in hand."""
 
     ok: bool
     counts: dict[str, int]  # check name -> violation count
     total_rows: int
-    verdicts: Optional[DataFrame] = None  # per-partition rows (if partitioned)
     failed_checks: list[str] = field(default_factory=list)
-    verdict_rows: Optional[list] = None  # the collected rows behind verdicts
+    verdict_rows: Optional[list] = None  # per-partition rows (if partitioned)
+    # the grouped aggregate behind verdict_rows: its session and schema
+    # build ``verdicts``
+    _grouped: Optional[DataFrame] = field(default=None, repr=False, compare=False)
+
+    @cached_property
+    def verdicts(self) -> Optional[DataFrame]:
+        """``verdict_rows`` as a local DataFrame (None in ungrouped
+        mode), made on first access and cached: ``createDataFrame``
+        costs ~20 ms of driver work that a consumer of ``verdict_rows``
+        never needs."""
+        if self._grouped is None:
+            return None
+        return self._grouped.sparkSession.createDataFrame(
+            self.verdict_rows, self._grouped.schema
+        )
 
     @property
     def error_message(self) -> Optional[str]:
@@ -97,12 +113,13 @@ def validate_table(
     summed driver-side, and returned twice: as ``verdict_rows`` (the
     collected ``Row`` list, for driver-side consumers such as the
     runner's audit commits — no further job) and as ``verdicts``, a
-    LOCAL frame over the same rows, so no consumer re-scans the input.
+    LOCAL frame over the same rows built on first access, so no
+    consumer re-scans the input.
     """
     checks = schema.checks()
     exprs = violation_count_exprs(checks) + [F.count(F.lit(1)).alias("__rows__")]
 
-    verdicts = vrows = None
+    grouped = vrows = None
     if partition_cols:
         grouped = df.groupBy(*partition_cols).agg(*exprs)
         vrows = grouped.collect()  # the ONE scan of df
@@ -110,7 +127,6 @@ def validate_table(
         totals = {
             n: sum(r[n] or 0 for r in vrows) if vrows else None for n in names
         }
-        verdicts = df.sparkSession.createDataFrame(vrows, grouped.schema)
     else:
         totals = df.agg(*exprs).collect()[0].asDict()
 
@@ -129,9 +145,9 @@ def validate_table(
         ok=not failed,
         counts=counts,
         total_rows=total_rows,
-        verdicts=verdicts,
         failed_checks=failed,
         verdict_rows=vrows,
+        _grouped=grouped,
     )
 
 

@@ -20,6 +20,7 @@ from pandera_forge_spark.plans import (
     pushed_filters,
     scan_read_schema,
 )
+from pandera_forge_spark.plans.inspect import optimized_plan
 from pandera_forge_spark.profiler import profile_by_group, profile_table, stat_exprs
 from pandera_forge_spark.schema import ColumnSpec, TableSchema
 from pandera_forge_spark.validator import orphan_rows, violation_rows
@@ -51,24 +52,36 @@ def test_stat_exprs_round_trips_per_aggregate(lineitem, py4j_commands):
 
 def _collected_plans(spark, monkeypatch, df):
     """The executed plan of every DataFrame ``profile_table(df)``
-    collects, in order, lower-cased and with no expression list cut
-    short (plan text keeps 25 fields by default)."""
+    collects, in order, lower-cased."""
     cls = type(df)
     frames = []
     real = cls.collect
     monkeypatch.setattr(cls, "collect", lambda self: frames.append(self) or real(self))
     profile_table(df)
     monkeypatch.undo()
+    return [(executed_plan(f).lower(), f) for f in frames]
+
+
+def test_plan_text_keeps_fields_past_25(spark):
+    """Plan text cuts every expression list after
+    ``spark.sql.debug.maxToStringFields`` (25) fields; executed_plan and
+    optimized_plan render it uncut, so a predicate finds field 36 of a
+    40-wide aggregate, and the setting is restored afterwards."""
     key = "spark.sql.debug.maxToStringFields"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "100000")
+    aggs = [F.sum(F.col("id") + i).alias(f"s{i}") for i in range(40)]
+    aggs[35] = F.expr("max(CAST(id AS STRING) RLIKE 'needle') AS hit")
+    df = spark.range(10).agg(*aggs)
+    assert spark.conf.get(key, None) is None
+    assert "needle" not in df._jdf.queryExecution().executedPlan().toString()
+
+    assert "needle" in executed_plan(df) and "needle" in optimized_plan(df)
+    assert spark.conf.get(key, None) is None  # unset again, not set to 25
+    spark.conf.set(key, "30")
     try:
-        return [(executed_plan(f).lower(), f) for f in frames]
+        assert "needle" in executed_plan(df)
+        assert spark.conf.get(key) == "30"
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+        spark.conf.unset(key)
 
 
 def test_profile_job1_has_no_regex_when_strings_are_small(spark, lineitem, monkeypatch):

@@ -394,17 +394,66 @@ def test_validation_batch_runs_only_validate_tables_jobs(spark, tmp_path):
     assert res.verdict_rows == res.verdicts.collect()
 
 
+def test_validation_batch_builds_no_local_frame(spark, tmp_path, monkeypatch):
+    """A runner pass over validation_process_batch reads the collected
+    verdict rows and never builds ``ValidationResult.verdicts``: no
+    ``createDataFrame`` call (~20 ms of driver work each)."""
+    from pyspark.sql import SparkSession
+
+    from pandera_forge_spark.runner import validation_process_batch
+    from pandera_forge_spark.schema import ColumnSpec, TableSchema
+    from pandera_forge_spark.validator import validate_table
+
+    docs = make_documents(spark, 200, seed=5, n_buckets=4)
+    table = HivePartitionedParquet(spark, str(tmp_path / "t"), "bucket")
+    table.write(docs)
+    schema = TableSchema(
+        name="Docs",
+        columns=[
+            ColumnSpec(
+                name="doc_id", sanitized_name="doc_id", name_was_valid=True,
+                spark_type="string", pandera_type="String", nullable=False,
+                ge="d",
+            )
+        ],
+    )
+    calls = []
+    real = SparkSession.createDataFrame
+    monkeypatch.setattr(
+        SparkSession,
+        "createDataFrame",
+        lambda self, *a, **k: calls.append(a) or real(self, *a, **k),
+    )
+    report = run_partitions(
+        table,
+        AuditLog(spark, str(tmp_path / "audit")),
+        process_batch=validation_process_batch(schema, "bucket"),
+        batch_size=2,
+    )
+    assert report.ok and len(report.processed) == 4
+    assert calls == []
+
+    # the frame is still there on first access, built once
+    df = table.read_partitions(table.list_partitions())
+    res = validate_table(df, schema, partition_cols=["bucket"], check_unique=False)
+    assert calls == []
+    assert sorted(res.verdicts.collect()) == sorted(res.verdict_rows)
+    assert res.verdicts is res.verdicts and len(calls) == 1
+    assert validate_table(df, schema, check_unique=False).verdicts is None
+
+
 def test_audit_commit_round_trips(spark, tmp_path, py4j_commands):
     """A commit is three metadata calls on the log's one DriverFS (clear
     stale files, write the parquet, touch _SUCCESS — the write makes the
-    partition directory): at most 25 py4j commands. With a Hadoop
-    ``Path`` class looked up by reflection on every call and an
-    explicit mkdirs it sent 43."""
+    partition directory). On a local root DriverFS serves them through
+    the OS: no py4j command at all. Through Hadoop's FileSystem a commit
+    sent 13, and 43 with the ``Path`` class looked up on every call and
+    an explicit mkdirs."""
     audit = AuditLog(spark, str(tmp_path / "audit"))
     audit.commit("warm", [{"rows": 1}])
     with py4j_commands() as sent:
         audit.commit("p0", [{"rows": 3, "violations": 1, "checks": {"c": 1}}])
-    assert len(sent) <= 25, len(sent)
+    assert len(sent) == 0, len(sent)
     assert audit.completed_partitions() == {"warm", "p0"}
     assert {r["partition"]: r["rows"] for r in audit.read().collect()} == {"warm": 1, "p0": 3}
 
