@@ -212,23 +212,6 @@ def _cast_back(value: Optional[str], dt: T.DataType):
     return value
 
 
-def top_values(
-    df: DataFrame,
-    columns: Sequence[str],
-    k: int = ISIN_MAX_DISTINCT,
-) -> dict[str, list[tuple[str, int]]]:
-    """JOB 2 — top-k frequent non-null values for many columns in ONE
-    shuffle: melt to (col, val) pairs, groupBy, rank.
-
-    Tie-break is deterministic: count desc, value asc (pandas
-    ``value_counts`` tie order is appearance order — nondeterministic
-    under distribution, so we define this total order; SURVEY.md §7
-    "hard parts" #4).
-    """
-    tops, _, _ = top_values_and_distinct(df, columns, k)
-    return tops
-
-
 TOPK_SALT_BUCKETS = 64
 
 

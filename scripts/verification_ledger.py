@@ -4,7 +4,7 @@ the last round whose driver CORRECTNESS artifact has it green
 whether it sits inside the current 50-entry driver window.
 
 The driver verifies only the FIRST 50 ``queries()`` entries per round,
-so the 100-query catalog rotates through the window (rotation history
+so the catalog rotates through the window (rotation history
 in BASELINE.md). This ledger makes the staleness auditable at a glance
 instead of resting on the in-code rotation comments.
 
@@ -22,9 +22,14 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 WINDOW = 50
+LEDGER_PATH = REPO / "VERIFICATION_LEDGER.json"
 
 
-def main() -> None:
+def build_ledger() -> dict:
+    """The ledger as a dict keyed by query name, in registry order:
+    position, window membership, last driver-green round and oracle
+    kind. Reads ``__spark_entry__`` and the CORRECTNESS artifacts;
+    writes nothing."""
     import __spark_entry__ as entrymod
 
     names = list(entrymod.queries())
@@ -43,7 +48,7 @@ def main() -> None:
             if ok:
                 last_green[name] = max(last_green[name] or 0, rn)
 
-    ledger = {
+    return {
         name: {
             "position": i + 1,
             "in_current_window": i < WINDOW,
@@ -52,8 +57,11 @@ def main() -> None:
         }
         for i, name in enumerate(names)
     }
-    out = REPO / "VERIFICATION_LEDGER.json"
-    out.write_text(json.dumps(ledger, indent=1) + "\n")
+
+
+def main() -> None:
+    ledger = build_ledger()
+    LEDGER_PATH.write_text(json.dumps(ledger, indent=1) + "\n")
 
     never = [n for n, v in ledger.items() if v["last_driver_green_round"] is None]
     stale = {
@@ -61,7 +69,7 @@ def main() -> None:
         for n, v in ledger.items()
         if not v["in_current_window"] and v["last_driver_green_round"] is not None
     }
-    print(f"{len(names)} queries; window={WINDOW}")
+    print(f"{len(ledger)} queries; window={WINDOW}")
     print(f"never driver-green (pending this round's window): {len(never)}")
     for n in never:
         print(f"  {n} (position {ledger[n]['position']})")
